@@ -35,7 +35,7 @@ from datetime import date, timedelta
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sinks import PARTITION_COL, WarehouseSink
+from ..sinks import PARTITION_COL, WarehouseSink, _partition_dir
 from .profiles import RAW_PARTITIONS
 
 PROFILE_WINDOW_DAYS = 365  # profiles-functions.ts profileWindowDays default
@@ -80,87 +80,41 @@ def purge_user_from_table(
     """Erase one user's rows from a date-partitioned warehouse table.
 
     One pushed-down scan finds the date partitions holding the user;
-    only those are rewritten. Survivors are durably written to a temp
-    sibling directory first, then swapped in with directory renames —
-    never an in-place overwrite of files a lineage might re-read — and
-    a partition the rewrite empties is dropped rather than left as a
-    stale directory. Returns an audit dict that states
-    the mutation scope honestly (r8 review finding #7):
+    only those are rewritten, through the sink's partition-replace step:
+    survivors are durably written out of band before any partition is
+    swapped, and a partition the rewrite empties is dropped rather than
+    left as a stale directory. Returns an audit dict that states the
+    mutation scope honestly (r8 review finding #7):
     {table, rows_deleted, partitions_rewritten, partitions_dropped}."""
-    spark = sink.spark
-    empty = {
+    audit = {
         "table": table,
         "rows_deleted": 0,
         "partitions_rewritten": 0,
         "partitions_dropped": 0,
     }
     if not sink.exists(table):
-        return empty
-    full = sink.read(table)
-    hit = F.col(user_col) == F.lit(user_id)
-    touched_vals = [
-        r[0]
-        for r in full.where(hit).select(PARTITION_COL).distinct().collect()
-    ]
-    if not touched_vals:
-        return empty
-    # NULL partition values are real (a null event timestamp lands in
-    # __HIVE_DEFAULT_PARTITION__): isin() would silently drop them
-    # (NULL semantics) and str(None) would name a directory that never
-    # exists — the audit would then report the partition purged while
-    # the user's rows remain on disk (round-9 review finding #2).
-    has_null = any(v is None for v in touched_vals)
-    non_null = [v for v in touched_vals if v is not None]
-    touched = [str(v) for v in non_null] + (
-        ["__HIVE_DEFAULT_PARTITION__"] if has_null else []
-    )
-    part_pred = F.col(PARTITION_COL).isin(non_null)
-    if has_null:
-        part_pred = part_pred | F.col(PARTITION_COL).isNull()
-    sub = full.where(part_pred)
-    deleted = sub.where(hit).count()
-    # Durably materialize the survivors to a temp sibling directory BEFORE
-    # touching any source file: a .cache() is not a write barrier — if an
-    # executor (or its cached blocks) is lost mid-overwrite, lineage
-    # recomputation would re-read partially-overwritten input and silently
-    # drop surviving rows on a GDPR path (round-9 ADVICE, medium). The
-    # temp copy makes the read side complete before the mutate side starts;
-    # each partition is then swapped in with directory renames.
-    table_path = sink._path(table)
-    tmp_path = table_path + ".__purge_tmp__"
-    shutil.rmtree(tmp_path, ignore_errors=True)
-    kept = sub.where(~hit)
-    kept.write.mode("overwrite").partitionBy(PARTITION_COL).parquet(tmp_path)
-    kept_dates = {
-        name[len(f"{PARTITION_COL}=") :]
-        for name in os.listdir(tmp_path)
-        if name.startswith(f"{PARTITION_COL}=")
-    } & set(touched)
-    try:
-        for d in touched:
-            old_dir = os.path.join(table_path, f"{PARTITION_COL}={d}")
-            trash = old_dir + ".__purge_old__"
-            shutil.rmtree(trash, ignore_errors=True)
-            if os.path.isdir(old_dir):
-                os.rename(old_dir, trash)
-            if d in kept_dates:
-                os.rename(
-                    os.path.join(tmp_path, f"{PARTITION_COL}={d}"), old_dir
-                )
-            shutil.rmtree(trash, ignore_errors=True)
-    finally:
-        shutil.rmtree(tmp_path, ignore_errors=True)
-    dropped = set(touched) - kept_dates
-    spark.catalog.refreshByPath(table_path)
-    return {
-        "table": table,
-        # rewritten = touched partitions that still had survivors (the
-        # ones the dynamic overwrite actually wrote); emptied ones were
-        # DROPPED, not rewritten
-        "rows_deleted": deleted,
-        "partitions_rewritten": len(set(touched) & kept_dates),
-        "partitions_dropped": len(dropped),
+        return audit
+    # null-safe: a plain `==` is null on anonymous rows, and `~hit` would
+    # then erase them along with the user
+    hit = F.col(user_col).eqNullSafe(F.lit(user_id))
+    # a null partition value is real (a null event timestamp lands in the
+    # Hive default partition) and must be erased like any other date
+    scope = {
+        _partition_dir(v)
+        for (v,) in sink.read(table)
+        .where(hit)
+        .select(PARTITION_COL)
+        .distinct()
+        .collect()
     }
+    if not scope:
+        return audit
+    sub = sink._read_partitions(table, scope)
+    audit["rows_deleted"] = sub.where(hit).count()
+    rewritten, dropped = sink._replace(table, sub.where(~hit), scope)
+    audit["partitions_rewritten"] = rewritten
+    audit["partitions_dropped"] = dropped
+    return audit
 
 
 def raw_partition_of(
@@ -212,9 +166,10 @@ def purge_user_from_raw(
             "rows_deleted": 0,
             "partitions_touched": 0,
         }
-    # same durable-temp-then-swap discipline as purge_user_from_table:
-    # write survivors OUT of band, then rename the partition directory —
-    # never overwrite files a live lineage might still re-read.
+    # same durable-write-then-swap discipline as the warehouse's
+    # partition-replace step: write survivors OUT of band, then rename the
+    # partition directory — never overwrite files a live lineage might
+    # still re-read.
     tmp_dir = part_dir + ".__purge_tmp__"
     trash = part_dir + ".__purge_old__"
     shutil.rmtree(tmp_dir, ignore_errors=True)

@@ -15,9 +15,12 @@ Reference (external Go service `jitsucom/bulker`, invoked from
   (`bulker-destination.ts:340-385`); one physical table per value.
 
 Scale design: tables are laid out as parquet partitioned by `_p_date`
-(UTC date of the event timestamp). An upsert then only rewrites the date
-partitions the incoming batch actually touches — bounded by the dedup
-window — using dynamic partition overwrite, never the whole table. On a
+(UTC date of the event timestamp). Every rewrite — upsert, compaction,
+per-user erasure — goes through one partition-replace step: the new rows
+are written once into a hidden scratch directory inside the table, each
+written partition is then renamed into place, and an in-scope partition
+that got no rows is dropped. An upsert's scope is the table's partitions
+within the dedup window of the batch, never the whole table. On a
 lakehouse table format this same operation is a `MERGE INTO` whose file
 pruning does the equivalent partition-level rewrite; the API here is
 format-agnostic so swapping the physical layer does not change callers.
@@ -26,6 +29,7 @@ format-agnostic so swapping the physical layer does not change callers.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -100,92 +104,29 @@ class WarehouseSink:
         """
         pk = primary_key or DEFAULT_PRIMARY_KEY
         df = self._conform(df, table, timestamp_col)
-        batch = _latest_per_key(df, pk, timestamp_col)
-
-        if not self.exists(table):
-            batch.write.mode("overwrite").partitionBy(PARTITION_COL).parquet(
-                self._path(table)
-            )
-            return
-
         # Only date partitions within the dedup window of the batch's own
-        # span can contain a conflicting primary key — read just those.
-        # The window extends BOTH directions: backward for the usual
-        # newer-batch-vs-older-row merge, and forward because an
-        # out-of-order redelivery dated BEFORE an existing same-key row
-        # must still find it (newest-wins keeps the existing row and the
-        # stale batch row is not written) — a backward-only read let the
-        # older duplicate land in its own partition (round-9 spine
-        # review finding #2; `sinks_cloud.merge_window_bounds` mirrors
-        # the same symmetric bounds for the MERGE families). Null event
-        # timestamps land in the null partition, which is always read —
-        # a None among the collected dates crashed min()/max() before
-        # (finding #6).
-        dates = [
-            r[0]
-            for r in batch.select(PARTITION_COL).distinct().collect()
-        ]
-        nn_dates = [d for d in dates if d is not None]
-        window = F.expr(f"INTERVAL {dedup_window_days} DAYS")
-        if nn_dates:
-            lo = F.lit(min(nn_dates)).cast("date") - window
-            hi = F.lit(max(nn_dates)).cast("date") + window
-            pred = F.col(PARTITION_COL).between(lo, hi)
-        else:
-            pred = F.lit(False)
-        if len(nn_dates) < len(dates):  # batch has null-date rows
-            pred = pred | F.col(PARTITION_COL).isNull()
-        existing = self.read(table).where(pred)
-
-        existing_dates = {
-            r[0] for r in existing.select(PARTITION_COL).distinct().collect()
+        # span can contain a conflicting primary key. The window extends
+        # BOTH directions: backward for the usual newer-batch-vs-older-row
+        # merge, and forward because an out-of-order redelivery dated
+        # BEFORE an existing same-key row must still find it (newest-wins
+        # keeps the existing row). Null event timestamps land in the null
+        # partition, in scope only when the batch has null dates.
+        lo, hi, has_null = _dedup_window(df, timestamp_col, dedup_window_days)
+        scope = {
+            name
+            for name in _partition_dirs(self._path(table))
+            if (lo is not None and _partition_dir(lo) <= name <= _partition_dir(hi))
+            or (has_null and name == _partition_dir(None))
         }
-        merged = _latest_per_key(
-            existing.unionByName(batch, allowMissingColumns=not self.schema_freeze),
-            pk,
-            timestamp_col,
-        ).cache()
-        try:
-            # Collect the surviving date set BEFORE the write: `merged`'s
-            # lineage reads the table's current files, and any
-            # recomputation after the dynamic overwrite would re-scan
-            # files the write just replaced (FILE_NOT_EXIST). The collect
-            # also fully materializes the cache the write then reuses.
-            merged_dates = {
-                r[0] for r in merged.select(PARTITION_COL).distinct().collect()
-            }
-            # Dynamic overwrite replaces exactly the partitions present in
-            # `merged`; everything else on disk stays as-is.
-            (
-                merged.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(PARTITION_COL)
-                .parquet(self._path(table))
+        rows = df
+        if scope:
+            rows = self._read_partitions(table, scope).unionByName(
+                df, allowMissingColumns=not self.schema_freeze
             )
-        finally:
-            merged.unpersist()
-        # A key whose NEWER row lands in a different date partition
-        # leaves its old partition without any surviving row — dynamic
-        # overwrite never touches a partition absent from `merged`, so
-        # the stale duplicate would survive on disk (round-4 twin
-        # finding: the warehouse MERGE updates in place, the parquet
-        # path must match). Drop partitions inside the window that the
-        # merge emptied. (Directory removal = this local/posix layout;
-        # an HDFS deployment issues the same delete via FileSystem.)
-        import shutil
-
-        for d in existing_dates - merged_dates:
-            # a null partition value is stored under the Hive default
-            # directory name, not "None"
-            name = "__HIVE_DEFAULT_PARTITION__" if d is None else str(d)
-            shutil.rmtree(
-                os.path.join(self._path(table), f"{PARTITION_COL}={name}"),
-                ignore_errors=True,
-            )
-        # overwrite + deletion invalidate any cached file listing for
-        # this table path — refresh so subsequent reads in the same
-        # session never chase replaced part files
-        self.spark.catalog.refreshByPath(self._path(table))
+        # A key whose newer row moves to another date leaves its old
+        # partition without survivors: the replace step drops it, so no
+        # stale duplicate survives on disk.
+        self._replace(table, _latest_per_key(rows, pk, timestamp_col), scope)
 
     # -- multi-table routing (bulker-destination.ts:340-385) -----------
 
@@ -197,40 +138,15 @@ class WarehouseSink:
         primary_key: list[str] | None = None,
         timestamp_col: str = "ts",
     ) -> list[str]:
-        """Route one layouted batch into its per-table destinations.
+        """Route one layouted batch into its per-table destinations."""
 
-        The distinct table list is tiny (bounded by event-name
-        cardinality); per-table writes reuse the cached routed batch, so
-        the source is scanned once.
-        """
-        df = df.cache()
-        try:
-            routed = [
-                r[0] for r in df.select(table_col).distinct().collect()
-            ]
-            # a null routing value is unroutable, not a crash: `== None`
-            # matches no rows (so the rows silently vanished) and
-            # upsert(None) died in os.path.join (round-9 spine review
-            # finding #7). Null-routed rows go to the quarantine table
-            # so nothing is silently lost and the batch completes.
-            tables = [t for t in routed if t is not None]
-            for t in tables:
-                part = df.where(F.col(table_col) == t).drop(table_col)
-                if deduplicate:
-                    self.upsert(part, t, primary_key, timestamp_col)
-                else:
-                    self.append(part, t, timestamp_col)
-            if len(tables) < len(routed):
-                q = UNROUTABLE_TABLE
-                part = df.where(F.col(table_col).isNull()).drop(table_col)
-                if deduplicate:
-                    self.upsert(part, q, primary_key, timestamp_col)
-                else:
-                    self.append(part, q, timestamp_col)
-                tables.append(q)
-            return tables
-        finally:
-            df.unpersist()
+        def write(part: DataFrame, table: str) -> None:
+            if deduplicate:
+                self.upsert(part, table, primary_key, timestamp_col)
+            else:
+                self.append(part, table, timestamp_col)
+
+        return _route(df, table_col, write)
 
     def compact(self, table: str, target_files_per_partition: int = 1) -> None:
         """Small-file compaction: streaming appends leave one file per
@@ -243,8 +159,8 @@ class WarehouseSink:
         # making the parameter a no-op for values > 1 (round-9 spine
         # review finding #10). A deterministic per-row salt bounded by
         # the target splits each date into at most `target` tasks/files.
+        scope = _partition_dirs(self._path(table))
         df = self.read(table)
-        n_dates = max(df.select(PARTITION_COL).distinct().count(), 1)
         salt = F.pmod(
             F.hash(*[F.col(c) for c in df.columns if c != PARTITION_COL]),
             F.lit(target_files_per_partition),
@@ -257,18 +173,56 @@ class WarehouseSink:
         df = (
             df.withColumn("_salt", salt)
             .repartitionByRange(
-                n_dates * target_files_per_partition,
+                max(len(scope), 1) * target_files_per_partition,
                 F.col(PARTITION_COL),
                 F.col("_salt"),
             )
             .drop("_salt")
         )
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(PARTITION_COL)
-            .parquet(self._path(table))
+        self._replace(table, df, scope)
+
+    # -- partition replace (shared by upsert, compact, erasure) --------
+
+    def _read_partitions(self, table: str, names: set[str]) -> DataFrame:
+        """Just the named partitions' rows — no listing of the rest."""
+        p = self._path(table)
+        return (
+            self.spark.read.option("mergeSchema", str(not self.schema_freeze).lower())
+            .option("basePath", p)
+            .parquet(*[os.path.join(p, n) for n in sorted(names)])
+            # a scope of only the null partition infers no date type
+            .withColumn(PARTITION_COL, F.col(PARTITION_COL).cast("date"))
         )
+
+    def _replace(self, table: str, rows: DataFrame, scope: set[str]) -> tuple[int, int]:
+        """Replace the `scope` partitions of `table` with `rows`.
+
+        The rows are written once, in full, to a scratch directory inside
+        the table before any partition on disk changes — `rows` may read
+        the very files being replaced, so nothing is recomputed after the
+        first rename. Each written partition is then renamed into place
+        and every in-scope partition that got no rows is dropped.
+        (Directory renames = this local/posix layout; an HDFS deployment
+        issues the same renames via FileSystem.) Returns (partitions
+        rewritten, partitions dropped)."""
+        path = self._path(table)
+        # the leading "." hides the scratch directory from Spark and
+        # pyarrow readers and from any listing of tables
+        scratch = os.path.join(path, ".replace")
+        shutil.rmtree(scratch, ignore_errors=True)
+        try:
+            rows.write.mode("overwrite").partitionBy(PARTITION_COL).parquet(scratch)
+            written = _partition_dirs(scratch)
+            for name in written | scope:
+                shutil.rmtree(os.path.join(path, name), ignore_errors=True)
+                if name in written:
+                    os.rename(os.path.join(scratch, name), os.path.join(path, name))
+        finally:
+            shutil.rmtree(scratch, ignore_errors=True)
+        # the swap invalidates any cached file listing for this table
+        # path — refresh so later reads never chase replaced part files
+        self.spark.catalog.refreshByPath(path)
+        return len(written), len(scope - written)
 
     def _conform(self, df: DataFrame, table: str, timestamp_col: str) -> DataFrame:
         df = df.withColumn(PARTITION_COL, F.to_date(F.col(timestamp_col)))
@@ -278,6 +232,49 @@ class WarehouseSink:
             known = set(self.read(table).columns)
             df = df.select(*[c for c in df.columns if c in known])
         return df
+
+
+def _partition_dirs(path: str) -> set[str]:
+    """The `_p_date=` partition directory names under a table path."""
+    if not os.path.isdir(path):
+        return set()
+    return {f for f in os.listdir(path) if f.startswith(f"{PARTITION_COL}=")}
+
+
+def _dedup_window(df: DataFrame, timestamp_col: str, days: int):
+    """The dedup window of a batch from one aggregate: (min event date -
+    days, max event date + days, whether any event date is null). Both
+    bounds are None when every date is null. The parquet upsert prunes
+    partitions by it and `sinks_cloud.merge_window_bounds` bounds the
+    MERGE families' ON clause by it."""
+    d = F.to_date(F.col(timestamp_col))
+    row = df.agg(
+        F.date_sub(F.min(d), days), F.date_add(F.max(d), days), F.max(d.isNull())
+    ).first()
+    return row[0], row[1], bool(row[2])
+
+
+def _partition_dir(value) -> str:
+    """The directory name of a `_p_date` value; Spark stores a null one
+    under the Hive default partition name."""
+    return f"{PARTITION_COL}={'__HIVE_DEFAULT_PARTITION__' if value is None else value}"
+
+
+def _route(df: DataFrame, table_col: str, write) -> list[str]:
+    """Split a routed batch by `table_col`, `write(rows, table)` each part
+    and return the tables written. Every part reads the cached batch, so
+    the source is scanned once. Null-routed rows are unroutable, not a
+    crash: they go to the quarantine table, so nothing is silently lost."""
+    df = df.cache()
+    try:
+        tables = []
+        for (t,) in df.select(table_col).distinct().collect():
+            name = UNROUTABLE_TABLE if t is None else t
+            write(df.where(F.col(table_col).eqNullSafe(t)).drop(table_col), name)
+            tables.append(name)
+        return tables
+    finally:
+        df.unpersist()
 
 
 def _latest_per_key(df: DataFrame, pk: list[str], timestamp_col: str) -> DataFrame:

@@ -293,26 +293,17 @@ def _mq(name: str, q: str) -> str:
 def merge_window_bounds(
     batch, timestamp_col: str = "ts", dedup_window_days: int = 31
 ) -> tuple[str, str]:
-    """The dedup window the parquet path computes driver-side
-    (sinks.WarehouseSink.upsert): [batch min date - window, batch max
-    date + window], as ISO literals for the MERGE ON clause. Symmetric
-    since round 9 — the forward extension lets an out-of-order
-    redelivery dated BEFORE an existing same-key target row still MATCH
-    it (newest-wins then leaves the target untouched and skips the
-    insert), keeping the two engines' dedup behavior identical. One
-    tiny agg — the same collect the parquet path already does for its
-    partition pruning."""
-    from pyspark.sql import functions as F
+    """The parquet upsert's dedup window (`sinks._dedup_window`):
+    [batch min date - window, batch max date + window], as ISO literals
+    for the MERGE ON clause. Symmetric since round 9 — the forward
+    extension lets an out-of-order redelivery dated BEFORE an existing
+    same-key target row still MATCH it (newest-wins then leaves the
+    target untouched and skips the insert), keeping the two engines'
+    dedup behavior identical. One tiny agg over the batch."""
+    from .sinks import _dedup_window
 
-    row = batch.agg(
-        F.date_sub(
-            F.min(F.to_date(F.col(timestamp_col))), dedup_window_days
-        ).alias("lo"),
-        F.date_add(
-            F.max(F.to_date(F.col(timestamp_col))), dedup_window_days
-        ).alias("hi"),
-    ).first()
-    return str(row["lo"]), str(row["hi"])
+    lo, hi, _ = _dedup_window(batch, timestamp_col, dedup_window_days)
+    return str(lo), str(hi)
 
 
 def merge_statements(

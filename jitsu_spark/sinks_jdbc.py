@@ -31,7 +31,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .sinks import DEFAULT_PRIMARY_KEY, WarehouseSink, _latest_per_key
+from .sinks import DEFAULT_PRIMARY_KEY, WarehouseSink, _latest_per_key, _route
 
 _IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
@@ -117,6 +117,23 @@ class JdbcWarehouseSink:
         finally:
             conn.close()
 
+    def _sql_table(self, table: str) -> str:
+        """`table` as SQL text for the writer, MERGE and reads. A name
+        with a leading underscore (the `_unroutable` quarantine table) is
+        no regular identifier in the SQL standard, and Derby rejects it
+        unquoted; it is quoted in the case the database stores unquoted
+        names in, so it names the table `exists` finds."""
+        name = _check_ident(table)
+        if not name.startswith("_"):
+            return name
+        conn = self._connection()
+        try:
+            md = conn.getMetaData()
+            upper, lower = md.storesUpperCaseIdentifiers(), md.storesLowerCaseIdentifiers()
+        finally:
+            conn.close()
+        return f'"{name.upper() if upper else name.lower() if lower else name}"'
+
     # -- reads ---------------------------------------------------------
 
     def read(
@@ -130,17 +147,18 @@ class JdbcWarehouseSink:
         """Parallel read when partition bounds are given (one cursor per
         partition range); single-cursor otherwise."""
         reader = self.spark.read
+        table = self._sql_table(table)
         if partition_column is not None:
             return reader.jdbc(
                 self.url,
-                _check_ident(table),
+                table,
                 column=partition_column,
                 lowerBound=lower_bound,
                 upperBound=upper_bound,
                 numPartitions=num_partitions or 8,
                 properties=self.properties,
             )
-        return reader.jdbc(self.url, _check_ident(table), properties=self.properties)
+        return reader.jdbc(self.url, table, properties=self.properties)
 
     # -- writes --------------------------------------------------------
 
@@ -158,7 +176,7 @@ class JdbcWarehouseSink:
         pk = primary_key or DEFAULT_PRIMARY_KEY
         (
             df.write.option("createTableColumnTypes", self._column_types(df, pk))
-            .jdbc(self.url, _check_ident(table), mode="append", properties=self.properties)
+            .jdbc(self.url, self._sql_table(table), mode="append", properties=self.properties)
         )
 
     def upsert(
@@ -171,19 +189,18 @@ class JdbcWarehouseSink:
         """MERGE-by-primary-key, newest timestamp wins — bulker's
         deduplicate:true contract against a SQL warehouse."""
         pk = [_check_ident(k) for k in (primary_key or DEFAULT_PRIMARY_KEY)]
-        table = _check_ident(table)
         _check_ident(timestamp_col)
         batch = _latest_per_key(df, pk, timestamp_col)
         col_types = self._column_types(batch, pk)
 
+        target, stage = self._sql_table(table), self._sql_table(f"{table}__stage")
         if not self.exists(table):
             (
                 batch.write.option("createTableColumnTypes", col_types)
-                .jdbc(self.url, table, mode="overwrite", properties=self.properties)
+                .jdbc(self.url, target, mode="overwrite", properties=self.properties)
             )
             return
 
-        stage = f"{table}__stage"
         (
             batch.write.option("createTableColumnTypes", col_types)
             .jdbc(self.url, stage, mode="overwrite", properties=self.properties)
@@ -196,7 +213,7 @@ class JdbcWarehouseSink:
             ins_cols = ", ".join(f'"{c}"' for c in cols)
             ins_vals = ", ".join(f's."{c}"' for c in cols)
             self._execute(
-                f"MERGE INTO {table} t USING {stage} s ON {on} "
+                f"MERGE INTO {target} t USING {stage} s ON {on} "
                 f'WHEN MATCHED AND s."{timestamp_col}" >= t."{timestamp_col}" '
                 f"THEN UPDATE SET {sets} "
                 f"WHEN NOT MATCHED THEN INSERT ({ins_cols}) VALUES ({ins_vals})"
@@ -240,21 +257,16 @@ class JdbcWarehouseSink:
         timestamp_col: str = "ts",
     ) -> list[str]:
         """Multi-table routing (bulker-destination.ts:340-385) against the
-        JDBC warehouse: one upsert/append per routed table."""
-        from pyspark.sql import functions as F
+        JDBC warehouse: one upsert/append per routed table, null-routed
+        rows quarantined in `sinks.UNROUTABLE_TABLE` like the parquet sink."""
 
-        df = df.cache()
-        try:
-            tables = [r[0] for r in df.select(table_col).distinct().collect()]
-            for t in tables:
-                part = df.where(F.col(table_col) == t).drop(table_col)
-                if deduplicate:
-                    self.upsert(part, t, primary_key, timestamp_col)
-                else:
-                    self.append(part, t, primary_key)
-            return tables
-        finally:
-            df.unpersist()
+        def write(part: DataFrame, table: str) -> None:
+            if deduplicate:
+                self.upsert(part, table, primary_key, timestamp_col)
+            else:
+                self.append(part, table, primary_key)
+
+        return _route(df, table_col, write)
 
 
 def make_warehouse_sink(spark: SparkSession, config: dict):

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -45,11 +46,20 @@ def test_upsert_is_idempotent(spark, sink):
 
 
 def test_upsert_within_batch_duplicates(spark, sink):
-    b = _df(spark, [("m1", _ts("2024-01-01T00:00:00"), "old"),
-                    ("m1", _ts("2024-01-01T00:01:00"), "new")])
-    sink.upsert(b, "t")
-    rows = sink.read("t").collect()
-    assert len(rows) == 1 and rows[0].v == "new"
+    same_date = [("m1", _ts("2024-01-01T00:00:00"), "old"),
+                 ("m1", _ts("2024-01-01T00:01:00"), "new")]
+    # the duplicates straddle two dates, into a fresh table: the older
+    # row's date must not be written at all
+    cross_date = [("m1", _ts("2024-01-01T00:00:00"), "old"),
+                  ("m1", _ts("2024-01-03T00:00:00"), "new")]
+    for table, rows, date in (
+        ("t", same_date, "2024-01-01"),
+        ("t2", cross_date, "2024-01-03"),
+    ):
+        sink.upsert(_df(spark, rows), table)
+        got = sink.read(table).collect()
+        assert len(got) == 1 and got[0].v == "new"
+        assert os.listdir(os.path.join(sink.base_dir, table)) == [f"_p_date={date}"]
 
 
 def test_untouched_partitions_survive(spark, sink):
@@ -294,3 +304,36 @@ def test_compact_honors_target_file_count(spark, tmp_path):
     n = len(glob.glob(part_dir + "/*.parquet"))
     assert 1 < n <= 4, n
     assert sink.read("ev").count() == 400
+
+
+def test_replace_leaves_no_scratch_or_trash(spark, sink):
+    """Upsert, compact and erasure all swap partitions through a scratch
+    directory inside the table. None may leave it, or any trash, behind:
+    the table directory holds only partitions, and its parent only
+    tables — every directory under a sink's base counts as a table."""
+    from jitsu_spark.operators.retention import purge_user_from_table
+
+    def assert_clean():
+        assert os.listdir(sink.base_dir) == ["t"] and sink.exists("t")
+        names = os.listdir(os.path.join(sink.base_dir, "t"))
+        assert names and all(n.startswith("_p_date=") for n in names), names
+
+    df = spark.createDataFrame(
+        [("m1", _ts("2024-01-01T00:00:00"), 1),
+         ("m2", _ts("2024-01-02T00:00:00"), 2),
+         ("m3", None, 1),
+         ("m4", _ts("2024-01-01T00:00:00"), None)],  # anonymous
+        "message_id string, ts timestamp, user_id long",
+    )
+    sink.upsert(df, "t")
+    assert_clean()
+    sink.upsert(df.where("user_id = 1"), "t")  # merges the null partition
+    assert_clean()
+    sink.compact("t")
+    assert_clean()
+    # the anonymous row shares user 1's partition and must survive it
+    audit = purge_user_from_table(sink, "t", 1)
+    assert audit == {"table": "t", "rows_deleted": 2,
+                     "partitions_rewritten": 1, "partitions_dropped": 1}
+    assert_clean()
+    assert sorted(r.message_id for r in sink.read("t").collect()) == ["m2", "m4"]

@@ -94,6 +94,25 @@ def test_routed_write(spark, sink):
     assert sink.read("pages").count() == 1  # deduped on message_id
 
 
+def test_routed_write_null_table_quarantined(spark, sink):
+    """A null routing value lands in the quarantine table, as on the
+    parquet sink, instead of reaching upsert() as a None table name."""
+    from jitsu_spark.sinks import UNROUTABLE_TABLE
+
+    df = spark.createDataFrame(
+        [("m1", T0, "tracks"), ("m2", T0, None)],
+        "message_id string, ts timestamp, _table string",
+    )
+    tables = sink.write_routed(df)
+    assert sorted(tables) == sorted(["tracks", UNROUTABLE_TABLE])
+    assert [r.message_id for r in sink.read("tracks").collect()] == ["m1"]
+    assert [r.message_id for r in sink.read(UNROUTABLE_TABLE).collect()] == ["m2"]
+    # the second null-routed batch MERGEs into the existing quarantine
+    sink.write_routed(df.where("_table IS NULL").replace("m2", "m3"))
+    got = {r.message_id for r in sink.read(UNROUTABLE_TABLE).collect()}
+    assert got == {"m2", "m3"}
+
+
 def test_partitioned_parallel_read(spark, sink):
     rows = [(f"m{i}", T0, str(i)) for i in range(100)]
     df = spark.createDataFrame(
